@@ -200,7 +200,7 @@ object Backfill {
         // floor 2, not 1: HashPartitioning(x, 1) degenerates to a
         // single-partition requirement that a 0-partition (empty-dir)
         // side-stream scan already satisfies — Spark then elides that
-        // exchange and the sweep's three zipped streams disagree on
+        // exchange and the sweep's two zipped streams disagree on
         // partition count. n >= 2 is a real hash requirement, never
         // elided.
         Math.max(2, Math.max(byMax, Math.min(byMin, cores8)))
@@ -221,21 +221,17 @@ object Backfill {
     * [firstStartSec, firstStartSec + nSlices * sliceSecs). `bronze` is
     * the raw input (any layout); rows are routed to slices by ts.
     *
-    * `contextStrategy` picks how committed lookback events reach the
-    * sliding frames of later slices:
-    *  - "rescan": each slice re-reads the narrow (conv_id, ts,
-    *    text_len, tool) columns of the committed gold inside the
-    *    lookback window — parquet column pruning skips the dominant
-    *    text column, and the rows ride a tiny side shuffle (not the
-    *    big exchange). Best when slices are at least about as wide as
-    *    the lookback (the re-read is < 1 slice of narrow rows).
-    *  - "tails": each slice pre-aggregates its events into ts-sorted
-    *    per-(conv, chunk) arrays fused with the state delta; later
-    *    slices read those instead of the gold. Best when slices are
-    *    much NARROWER than the lookback (hourly slices + a 7d frame
-    *    would re-read ~168 slices of events every slice under
-    *    rescan; tails make that O(conversations) array rows).
-    *  - "auto" (default): tails iff lookback >= 2x slice width.
+    * Committed lookback events reach the sliding frames of later
+    * slices by RESCAN: each slice re-reads the narrow (conv_id, ts,
+    * text_len, tool) columns of the committed gold inside the lookback
+    * window ([[contextRead]]) — parquet column pruning skips the
+    * dominant text column, and the rows ride a small side shuffle into
+    * the sweep, not the big exchange. It is the only context path: a
+    * pre-aggregated per-conversation alternative measured within noise
+    * of it at the CLI's default 1-day slices (7x lookback/slice). Much
+    * narrower slices (e.g. hourly, 168x) are accepted and exact, but
+    * re-read up to 168 slices of narrow rows per slice; their speed is
+    * unmeasured.
     *
     * `skewHeavyThreshold` routes conversations whose PER-SLICE cost —
     * rows in this slice, or committed lookback events — exceeds the
@@ -269,7 +265,6 @@ object Backfill {
       rangeLayoutWrites: Boolean = false,
       compactStateEvery: Int = 16,
       segmentSecs: Long = 604800L,
-      contextStrategy: String = "auto",
       materializeSilver: Boolean = false,
       skewDetection: String = "lazy"): Seq[SliceReport] = {
 
@@ -279,13 +274,6 @@ object Backfill {
     val silverPath = s"$outDir/silver"
     val goldPath = s"$outDir/gold"
     val silverCols = TranscriptSchema.silver.fieldNames.toSeq
-    val useTails = contextStrategy match {
-      case "tails"  => true
-      case "rescan" => false
-      case "auto"   => MaxLookbackSecs >= 2 * sliceSecs
-      case other => throw new IllegalArgumentException(
-        s"contextStrategy must be auto|tails|rescan, got '$other'")
-    }
 
     val tsType = bronze.schema("ts").dataType
     // explicit read schema for all committed-gold reads: survives empty
@@ -318,36 +306,6 @@ object Backfill {
     // committed row counts feed the empty-slice probe heuristic below
     val committedRowCounts: Map[String, Long] =
       wmRows.map(r => r.getString(0) -> r.getLong(3)).toMap
-
-    // Strategy guard (same loud-failure class as the slice-width
-    // guard): resuming a table whose committed slices wrote state-only
-    // (rescan) deltas with an effective `tails` strategy would make
-    // readFrameTails silently filter every null-tail row — lookback
-    // frames spanning the switch would see zero committed context and
-    // the 1h/24h/7d features would be silently wrong. The effective
-    // strategy is persisted as a driver-written table property on
-    // every run; pre-props tables are probed for written tail arrays
-    // (one tiny narrow aggregate, resume-only). The reverse switch
-    // (tails table resumed under rescan) is safe — rescan reads the
-    // committed gold files directly — but downgrades the property, so
-    // a later tails resume of the mixed chain is correctly rejected.
-    val persistedTails = Checkpoint.readContextTailsProp(spark, outDir)
-    // an all-empty committed history has no context to lose — the
-    // guard only bites when committed DATA exists (ADVICE r5: a false
-    // property left by a failed/no-op rescan invocation must not
-    // reject a tails resume of an empty table)
-    val committedNonEmptySecs: Set[Long] =
-      wmRows.filter(_.getLong(3) > 0L).map(_.getLong(1)).toSet
-    if (committedNonEmptySecs.nonEmpty && useTails) {
-      val tailsAvailable = persistedTails.getOrElse(
-        Checkpoint.frameTailsEverWritten(spark, outDir, committedNonEmptySecs))
-      if (!tailsAvailable)
-        throw new IllegalArgumentException(
-          "effective contextStrategy is 'tails' but the committed slices of this table " +
-            "were written under the state-only (rescan) strategy and carry no frame-tail " +
-            "arrays — lookback frames would silently lose all committed context. Resume " +
-            "with --context rescan, or rebuild the table from scratch under tails.")
-    }
 
     // Table-version guard (resume across engine upgrades): the frame
     // stages read the persisted text_len of committed gold; a table
@@ -409,7 +367,7 @@ object Backfill {
         if (n > 0) Some(Math.max(1L, n / Math.max(nSlices, 1))) else None
       } catch { case _: Throwable => None }
 
-    val reports = (0 until nSlices).map { i =>
+    (0 until nSlices).map { i =>
       val start = firstStartSec + i * sliceSecs
       val end = start + sliceSecs
       val id = sliceId(start)
@@ -449,16 +407,11 @@ object Backfill {
         // sweep resolves latest-per-conversation inline)
         val deltas = phase(id, "delta chain read")(Checkpoint.readConvStateDeltas(spark, outDir, start))
 
-        // --- committed lookback context, per strategy ---
-        val tails =
-          if (useTails) phase(id, "tail read")(
-            Checkpoint.readFrameTails(spark, outDir, start, sliceSecs, MaxLookbackSecs))
-          else FusedSweep.emptyTails(spark)
-        // narrow gold context: conv_id + ts + persisted text_len + tool
-        // only — parquet column pruning never touches the dominant
-        // text column. Used by the rescan frame stream, the heavy
-        // path's frame context, and the context-size arm of the skew
-        // dispatch.
+        // --- committed lookback context: conv_id + ts + persisted
+        // text_len + tool only — parquet column pruning never touches
+        // the dominant text column. Used by the light sweep's context
+        // stream, the heavy path's frame context, and the context-size
+        // arm of the skew dispatch.
         def ctxGold: DataFrame = contextRead(spark, goldPath, id, start, sliceSecs,
           Some(goldFileSchema))
 
@@ -486,10 +439,7 @@ object Backfill {
         // beats re-planning broadcast joins into all split branches.
         def detectCounts(thr: Long): Seq[(String, Long)] = phase(id, "heavy ids")({
           val sliceCnt = rawSlice.groupBy(col("conv_id")).count()
-          val ctxCnt =
-            if (useTails)
-              tails.groupBy(col("conv_id")).agg(sum(size(col("tail_ts"))).as("count"))
-            else ctxGold.groupBy(col("conv_id")).count()
+          val ctxCnt = ctxGold.groupBy(col("conv_id")).count()
           sliceCnt.filter(col("count") > thr)
             .unionByName(ctxCnt.filter(col("count") > thr))
             .groupBy(col("conv_id")).agg(max(col("count")).as("count"))
@@ -499,15 +449,11 @@ object Backfill {
         })
 
         // per-task state side-files: the sweep tasks emit this slice's
-        // conversation-state delta (and tail arrays in tails mode) as
-        // a side product of the gold WRITE job — the separate
-        // slice-meta aggregate job survives only for the few
-        // skew-routed conversations the sweep never sees
+        // conversation-state delta as a side product of the gold WRITE
+        // job — the separate slice-meta aggregate job survives only for
+        // the few skew-routed conversations the sweep never sees
         val stateSink = graft.meta.StateSideSink(
           dir = Checkpoint.stateDeltaDir(outDir, start),
-          minKeepSec = end - MaxLookbackSecs,
-          collectTails = useTails,
-          chunkTurns = 65536,
           conf = new graft.meta.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
 
         // heavy-path intermediates persisted for the duration of one
@@ -524,13 +470,10 @@ object Backfill {
           val routedIds = (heavy ++ inverted).distinct
           val isRouted =
             if (routedIds.isEmpty) lit(false) else col("conv_id").isin(routedIds: _*)
-          val lightCtxStream =
-            if (useTails) None
-            else Some(FusedSweep.ctxStreamRows(ctxGold.filter(!isRouted)))
           val light = FusedSweep.gold(
             deltas.filter(!isRouted), emptySilver(spark),
             sliceBronze.filter(!isRouted), sessionGapSecs,
-            Some(tails.filter(!isRouted)), lightCtxStream,
+            ctxStream = Some(FusedSweep.ctxStreamRows(ctxGold.filter(!isRouted))),
             capacityLimit = skewHeavyThreshold,
             numPartitions = Some(sweepParts),
             stateSink = Some(stateSink))
@@ -545,9 +488,9 @@ object Backfill {
                 col("dt"), col("text_len"))
               .filter(isRouted)
             // ts-inverted conversations take the plain single-window
-            // session stage: SegmentedSessions chains per-segment
-            // summaries in turn order within TS-based segments, which
-            // an inversion crossing a segment boundary would corrupt.
+            // session stage ([[withState]]): the segmented path chains
+            // per-segment summaries within TS-based segments, which an
+            // inversion crossing a segment boundary would corrupt.
             // (Anomalies are few; heavy AND inverted prefers correct.)
             val segIds = heavy.filterNot(inverted.contains)
             val parts = Seq(
@@ -556,7 +499,7 @@ object Backfill {
                 val in = col("conv_id").isin(ids: _*)
                 heavyGold(deltas.filter(in), context.filter(in),
                   sliceBronze.filter(in), start, sessionGapSecs, segmentSecs,
-                  segmentedSessions = segmented, outPartitions = Some(sweepParts),
+                  segmented = segmented, outPartitions = Some(sweepParts),
                   persistRegistry = Some(slicePersists))
             }
             parts.foldLeft(light)((acc, h) =>
@@ -729,17 +672,15 @@ object Backfill {
         }
 
         // --- slice meta for later slices: the LIGHT path's state
-        // delta (+ frame tails under the tails strategy) already
-        // landed as per-task side-files of the gold write — zero extra
-        // jobs. Only skew-routed conversations (absent from the sweep)
-        // still need the aggregate, over their narrow columns only.
+        // delta already landed as per-task side-files of the gold
+        // write — zero extra jobs. Only skew-routed conversations
+        // (absent from the sweep) still need the aggregate, over their
+        // narrow columns only.
         val routedIds = (heavyIds ++ invertedIds).distinct
-        if (rows > 0L && routedIds.nonEmpty) {
-          val routedGold = goldWritten.filter(col("conv_id").isin(routedIds: _*))
+        if (rows > 0L && routedIds.nonEmpty)
           phase(id, "routed slice meta")(Checkpoint.appendSliceMeta(outDir, start,
-            if (useTails) Checkpoint.sliceMetaFromGold(routedGold, end, MaxLookbackSecs)
-            else Checkpoint.stateDeltaFromGold(routedGold)))
-        }
+            Checkpoint.stateDeltaFromGold(
+              goldWritten.filter(col("conv_id").isin(routedIds: _*)))))
 
         // --- the committing watermark row (atomic last) ---
         Checkpoint.commitSlice(spark, outDir, id,
@@ -752,16 +693,6 @@ object Backfill {
         SliceReport(id, rows, wallMs, skipped = false)
       }
     }
-    // context-strategy property, written AFTER the loop (ADVICE r5): a
-    // no-op resume (nothing new committed) or a run that fails before
-    // committing anything must not downgrade a true property — only a
-    // run that actually committed new data pins the effective strategy;
-    // a fresh table's first committing run establishes it.
-    val wroteNewData = reports.exists(r => !r.skipped && r.rows > 0L)
-    if (wroteNewData || (committed.isEmpty && reports.exists(!_.skipped)))
-      Checkpoint.writeContextTailsProp(spark, outDir,
-        useTails && (committedNonEmptySecs.isEmpty || persistedTails.getOrElse(true)))
-    reports
   }
 
   private def deleteDir(spark: SparkSession, path: String): Unit = {
@@ -898,14 +829,12 @@ object Backfill {
       rangeLayoutWrites: Boolean = false,
       compactStateEvery: Int = 16,
       segmentSecs: Long = 604800L,
-      contextStrategy: String = "auto",
       materializeSilver: Boolean = false): Seq[SliceReport] = {
     val latePath = s"$outDir/_late"
     val runAll = () => run(spark, bronze, outDir, firstStartSec, sliceSecs, nSlices,
       sessionGapSecs = sessionGapSecs, skewHeavyThreshold = skewHeavyThreshold,
       rangeLayoutWrites = rangeLayoutWrites, compactStateEvery = compactStateEvery,
-      segmentSecs = segmentSecs, contextStrategy = contextStrategy,
-      materializeSilver = materializeSilver)
+      segmentSecs = segmentSecs, materializeSilver = materializeSilver)
     if (!Checkpoint.pathExists(spark, latePath)) return runAll()
     // the partition-dir value reads back as the narrowest fitting
     // integral type — normalize to long
@@ -923,8 +852,9 @@ object Backfill {
     reports
   }
 
-  /** Empty DF with the silver schema (the light path's context input —
-    * frame tails replace raw context rows there).
+  /** Empty DF with the silver schema (the light path's raw-context
+    * input — the narrow context stream replaces raw context rows
+    * there).
     */
   private[graft] def emptySilver(spark: SparkSession): DataFrame =
     spark.createDataFrame(
@@ -962,12 +892,15 @@ object Backfill {
       .collect().map(_.getString(0)).toSeq
   }
 
-  /** Heavy-conversation slice path: dedup by (conv, turn) key (a plain
-    * map-side-combinable aggregate — massively parallel, no
-    * per-conversation window), EXACT chunked range features
-    * ([[graft.skew.ChunkedWindows]]), and the two-pass segmented
-    * lag/gap/session ([[graft.skew.SegmentedSessions]]). No stage in
-    * this path serializes a whole conversation on one task.
+  /** Heavy-conversation slice path: dedup by (conv, turn) key (a keyed
+    * row_number — massively parallel, no per-conversation window),
+    * then either the fused segmented sweep
+    * ([[graft.gold.SegmentedSweep]]: frames + lag + sessions in one
+    * (conv, time-segment) exchange — no stage serializes a whole
+    * conversation on one task) or, with `segmented = false` (the
+    * ts-inverted reroute), EXACT segment-salted range features
+    * ([[graft.gold.FastWindows.rangeFeaturesChunked]]) plus the
+    * turn-ordered single-window [[withState]].
     */
   private[graft] def heavyGold(
       deltas: DataFrame,
@@ -976,11 +909,8 @@ object Backfill {
       start: Long,
       gapSecs: Long,
       segmentSecs: Long,
-      segmentedSessions: Boolean = true,
+      segmented: Boolean = true,
       outPartitions: Option[Int] = None,
-      // fused one-exchange segmented path (SegmentedSweep) vs the
-      // legacy three-stage stack; env opt-out for A/B probes
-      fusedSegmented: Boolean = !sys.env.get("SPARK_GRAFT_FUSED_HEAVY").contains("0"),
       // slice-scoped persist registry: intermediates cached here are
       // unpersisted by the caller right after the slice's write lands.
       // None (specs / single-shot) skips the persists entirely.
@@ -1049,15 +979,15 @@ object Backfill {
         col("tool"), col("ts")))
 
     val ctxF = scoped(ctx.withColumn("_fw_len", ctxLen).drop("text_len"))
+    val state = Checkpoint.latestConvState(deltas)
+      .select(col("conv_id"), col("st_last_ts"), col("st_last_role"), col("st_sessions"))
 
     // FUSED segmented path (round-5, NEXT.md lead 1): frames + lag +
     // sessions in one full-width (conv, seg) exchange + one narrow
-    // summary pass, replacing the three-stage chunked/two-pass stack
-    // below. Only for contract-clean conversations — the ts-inverted
-    // reroute keeps the turn-ordered single-window session stage.
-    if (segmentedSessions && fusedSegmented) {
-      val state = Checkpoint.latestConvState(deltas)
-        .select(col("conv_id"), col("st_last_ts"), col("st_last_role"), col("st_sessions"))
+    // summary pass. Only for contract-clean conversations — the
+    // ts-inverted reroute keeps the turn-ordered single-window session
+    // stage below.
+    if (segmented) {
       // the summary's winners derive from the CACHED dedup output, not
       // a third scan+aggregate over raw bronze: silverH is exactly the
       // deduped row set the sweep will emit as owners (one row per
@@ -1084,26 +1014,19 @@ object Backfill {
     val withContext = ctxF
       .select(silverF.columns.map(col): _*)
       .unionByName(silverF)
-    // O(n) segment-salted sweep (FastWindows), NOT the declarative
-    // ChunkedWindows twin — WindowExec rebuilds collect_set per row of
-    // a sliding range frame, O(rows x frame), unrunnable on a
-    // mega-conversation (the two are property-tested equal)
+    // O(n) segment-salted sweep (FastWindows), NOT a declarative
+    // window — WindowExec rebuilds collect_set per row of a sliding
+    // range frame, O(rows x frame), unrunnable on a mega-conversation
+    // (the two are property-tested equal)
     val ranged = graft.gold.FastWindows
       .rangeFeaturesChunked(withContext, segmentSecs)
       .drop("_fw_len")
       .filter(col("ts") >= tsLit(withContext, start))
       .withColumn("dt", to_date(col("ts")))
-
-    val state = Checkpoint.latestConvState(deltas)
-      .select(col("conv_id"), col("st_last_ts"), col("st_last_role"), col("st_sessions"))
-    val sessioned =
-      if (segmentedSessions)
-        graft.skew.SegmentedSessions.withStateSegmented(ranged, state, gapSecs, segmentSecs)
-      else
-        withState(ranged, state, gapSecs)
+    val sessioned = withState(ranged, state, gapSecs)
     // round-robin the heavy output across the session's full
-    // parallelism before it unions into the slice write: the segment
-    // stages leave O(span/segment) partitions, and a downstream write
+    // parallelism before it unions into the slice write: the window
+    // stages leave few populated partitions, and a downstream write
     // inheriting that would serialize the mega's full-width rows on a
     // few tasks (measured: a ~7 s write straggler for 1M rows on 3
     // tasks). Numbered repartition so AQE leaves it alone; the
@@ -1154,11 +1077,10 @@ object Backfill {
     * seeded by the previous slice's per-conversation state — exact
     * across slice boundaries. Production use: the ts-INVERTED
     * conversation reroute only (the turn-ordered single window is
-    * correct under any turn/ts disagreement, where the segmented
-    * two-pass would chain summaries across ts-based segments in the
-    * wrong order); a mega-conversation serializes here, so the skew
-    * path proper is [[graft.skew.SegmentedSessions]]. Also the
-    * equality baseline in specs.
+    * correct under any turn/ts disagreement, where the segmented path
+    * would chain summaries across ts-based segments in the wrong
+    * order); a mega-conversation serializes here, so the skew path
+    * proper is [[graft.gold.SegmentedSweep]].
     */
   private[graft] def withState(ranged: DataFrame, state: DataFrame, gapSecs: Long): DataFrame = {
     val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))

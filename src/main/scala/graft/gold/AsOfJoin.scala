@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions._
   * silver_and_gold.py:143, is the anti-pattern this deletes). Cost is
   * O((|Q|+|H|) log) per partition and broadcast-free, so it survives
   * 100 TB histories; skewed mega-conversations follow the same
-  * chunking lever as the window stage (graft.skew.ChunkedWindows).
+  * time-segment lever as the window stage
+  * ([[FastWindows.rangeFeaturesChunked]], [[asOfSegmented]]).
   */
 object AsOfJoin {
 

@@ -28,8 +28,8 @@ import org.apache.spark.sql.types._
   *
   * Memory: the 7d deque holds only that conversation's last-7-days
   * rows as 24-byte entries; the chunked variant
-  * ([[ChunkedWindows]]-style segmenting, `extraPartCols`) bounds it
-  * for pathological single-conversation densities.
+  * ([[rangeFeaturesChunked]]: time-segment salting, `extraPartCols`)
+  * bounds it for pathological single-conversation densities.
   */
 // One ring buffer per frame — primitive arrays, zero per-row
 // allocation on the add/evict path (the sweep is the engine's
@@ -88,15 +88,6 @@ private[gold] final class FrameQ(val spanSecs: Long, trackDistinct: Boolean = tr
     var i = 0
     while (i < size) { tool((head + i) % cap) = null; i += 1 }
     head = 0; size = 0; sumLen = 0L; toolCalls = 0L; distinct.clear()
-  }
-  /** Visit the buffered entries oldest-to-newest. Used by the fused
-    * sweep's side-feed fallback: on the first out-of-order context
-    * entry the already-fed prefix (fully resident here — no eviction
-    * happens during the drain) is moved back into the sort buffer.
-    */
-  def foreachEntry(f: (Long, Long, String) => Unit): Unit = {
-    var i = 0
-    while (i < size) { val j = (head + i) % cap; f(ts(j), len(j), tool(j)); i += 1 }
   }
 }
 
@@ -204,9 +195,11 @@ object FastWindows {
   }
 
   /** Skew-split exact variant: time-segment salting with lookback
-    * context (same scheme as [[graft.skew.ChunkedWindows]]) on top of
-    * the O(n) sweep — a mega-conversation becomes span/segmentSecs
-    * parallel tasks.
+    * context on top of the O(n) sweep — rows are salted by
+    * floor(ts/segment) and replicated into the following
+    * ceil(lookback/segment) segments, windows run per (conv, segment),
+    * and only owner rows are emitted, so a mega-conversation becomes
+    * span/segmentSecs parallel tasks.
     */
   def rangeFeaturesChunked(
       silver: DataFrame,
@@ -220,17 +213,5 @@ object FastWindows {
     rangeFeatures(replicated, extraPartCols = Seq("_seg"))
       .filter(col("_seg") === col("_owner_seg"))
       .drop("_seg", "_owner_seg")
-  }
-
-  /** Heavy-hitter dispatch mirroring [[graft.skew.ChunkedWindows.rangeFeaturesAuto]]. */
-  def rangeFeaturesAuto(
-      silver: DataFrame,
-      heavyThreshold: Long = 2000000L,
-      segmentSecs: Long = 604800L): DataFrame = {
-    val heavyKeys = silver.groupBy(col("conv_id")).count()
-      .filter(col("count") > heavyThreshold).select(col("conv_id"))
-    val light = silver.join(broadcast(heavyKeys), Seq("conv_id"), "left_anti")
-    val heavy = silver.join(broadcast(heavyKeys), Seq("conv_id"), "left_semi")
-    rangeFeatures(light).unionByName(rangeFeaturesChunked(heavy, segmentSecs))
   }
 }

@@ -12,30 +12,30 @@ import org.apache.spark.unsafe.types.UTF8String
 /** FUSED segmented gold path for skew-routed (mega) conversations:
   * ONE full-width exchange keyed (conv_id, time-segment) computing the
   * five trailing range features AND lag/gap AND sessionization in a
-  * single InternalRow sweep — replacing the legacy heavy stack's three
-  * full-width passes (ChunkedWindows/FastWindows frame pass +
-  * SegmentedSessions' two window passes).
+  * single InternalRow sweep — replacing a three-pass stack (a
+  * segment-salted frame pass plus a two-pass segmented session chain).
   *
-  * Scheme (SURVEY.md §4.2.3 + SegmentedSessions' chain, fused):
+  * Scheme (SURVEY.md §4.2.3, frames and session chain fused):
   *  - frames: every event row is replicated as a narrow FEEDER (no
   *    text — just (ts, len, tool)) into the following
   *    ceil(lookback/segmentSecs) segments; committed lookback context
   *    also feeds its own segment. Each owner row's trailing frames
   *    then lie entirely within its segment's feed — exact, same math
-  *    as ChunkedWindows (property-tested there), executed by the same
+  *    as [[FastWindows.rangeFeaturesChunked]], executed by the same
   *    FrameQ ring buffers as the light sweep.
   *  - lag/sessions: a NARROW summary pass (conv, turn, ts, role only —
   *    the scan never decodes text; a dedup-lite min_by is enough
   *    because rows tying on (ts, role, tool) cannot disagree on
   *    (ts, role)) produces per-(conv, seg) first/last/breaks; a tiny
   *    window chains them with the carried state into per-segment
-  *    (prev_ts, prev_role, session_offset) seeds — SegmentedSessions'
-  *    exact math — which broadcast to the sweep as a driver map
-  *    (O(heavy convs x segments) entries, the skew tail by
+  *    (prev_ts, prev_role, session_offset) seeds — exact, because a
+  *    segment's first row needs only its predecessor's (ts, role) and
+  *    the breaks counted before it — which broadcast to the sweep as a
+  *    driver map (O(heavy convs x segments) entries, the skew tail by
   *    construction).
   *
-  * Cost vs legacy: one narrow shuffle + one full-width shuffle
-  * instead of three full-width window exchanges; the dedup aggregate
+  * Cost vs the three-pass stack: one narrow shuffle + one full-width
+  * shuffle instead of three full-width window exchanges; the dedup aggregate
   * stays (segment-local dedup is wrong when a duplicate turn carries
   * a divergent ts). This lowers the plain-vs-segmented crossover so
   * mid-size megas stop serializing a slice's sweep on one task

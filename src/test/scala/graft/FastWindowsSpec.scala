@@ -51,11 +51,13 @@ class FastWindowsSpec extends AnyFunSuite {
     assert(r3.getAs[Long]("turns_cnt_1h") == 4)
   }
 
-  test("fast chunked and auto dispatch == declarative") {
+  test("fast chunked == declarative at small and lookback-wide segments") {
     val silver = SilverBuilder.build(
       TranscriptGen.transcripts(spark, nConvs = 15, avgTurns = 15, megaConvs = 1, megaTurns = 600))
     val ref = FeatureWindows.rangeFeatures(silver)
+    // 1d segments: 8x replication, high parallelism; 7d segments
+    // (= max lookback): 2x replication
     assertSame(FastWindows.rangeFeaturesChunked(silver, segmentSecs = 86400L), ref)
-    assertSame(FastWindows.rangeFeaturesAuto(silver, heavyThreshold = 100L), ref)
+    assertSame(FastWindows.rangeFeaturesChunked(silver, segmentSecs = 604800L), ref)
   }
 }

@@ -10,11 +10,10 @@ import graft.gen.TranscriptGen
 import graft.meta.Checkpoint
 
 /** Per-task state side-files (round-5): the sweep tasks emit the
-  * slice-meta rows the legacy post-write aggregate used to compute —
-  * this spec asserts the two are EQUAL row-for-row, per slice, under
-  * both context strategies, including a skew-routed conversation
-  * (whose meta still comes from the aggregate, appended as JSON to the
-  * same dir).
+  * slice-meta rows the post-write aggregate used to compute — this
+  * spec asserts the two are EQUAL row-for-row, per slice, including a
+  * skew-routed conversation (whose meta still comes from the
+  * aggregate, appended as parquet to the same dir).
   */
 class StateSideFileSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -30,26 +29,18 @@ class StateSideFileSpec extends AnyFunSuite {
         s"\nexpected-only:\n${b.exceptAll(a).limit(5).collect().mkString("\n")}")
   }
 
-  private def checkParity(dir: String, useTails: Boolean): Unit = {
+  private def checkParity(dir: String): Unit = {
     val gold = spark.read.parquet(s"$dir/gold")
-    val cols = Seq("conv_id", "chunk", "st_last_ts", "st_last_turn_idx",
-      "st_last_role", "st_sessions", "tail_ts", "tail_len", "tail_tool")
+    val cols = Checkpoint.convStateSchema.fieldNames.toSeq
     for (i <- 0 until nSlices) {
       val s = start + i * sliceSecs
       val goldSlice = gold.filter(col("slice_id") === Backfill.sliceId(s))
       if (goldSlice.limit(1).count() > 0) {
-        val expected = (if (useTails)
-          Checkpoint.sliceMetaFromGold(goldSlice, s + sliceSecs, 604800L)
-        else
-          Checkpoint.stateDeltaFromGold(goldSlice)
-            .withColumn("tail_ts", lit(null).cast("array<long>"))
-            .withColumn("tail_len", lit(null).cast("array<long>"))
-            .withColumn("tail_tool", lit(null).cast("array<string>")))
-          .select(cols.map(col): _*)
+        val expected = Checkpoint.stateDeltaFromGold(goldSlice).select(cols.map(col): _*)
         val actual = Checkpoint.readDeltaTable(spark, dir,
           minExclusive = Some(s - 1), maxExclusive = Some(s + 1))
           .select(cols.map(col): _*)
-        assertSameRows(actual, expected, s"slice s$s (tails=$useTails)")
+        assertSameRows(actual, expected, s"slice s$s")
       }
     }
   }
@@ -58,16 +49,8 @@ class StateSideFileSpec extends AnyFunSuite {
     val bronze = TranscriptGen.transcripts(spark, nConvs = 25, avgTurns = 18,
       injectAnomalies = true).cache()
     val dir = Files.createTempDirectory("ssf_rescan").toString
-    Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices, contextStrategy = "rescan")
-    checkParity(dir, useTails = false)
-  }
-
-  test("side-files == legacy aggregate, tails strategy (trimmed arrays)") {
-    val bronze = TranscriptGen.transcripts(spark, nConvs = 25, avgTurns = 18,
-      injectAnomalies = true).cache()
-    val dir = Files.createTempDirectory("ssf_tails").toString
-    Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices, contextStrategy = "tails")
-    checkParity(dir, useTails = true)
+    Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices)
+    checkParity(dir)
   }
 
   test("side-files == legacy aggregate with a skew-routed mega (mixed sweep + aggregate rows)") {
@@ -75,29 +58,7 @@ class StateSideFileSpec extends AnyFunSuite {
       megaConvs = 2, megaTurns = 2000, injectAnomalies = true).cache()
     val dir = Files.createTempDirectory("ssf_skew").toString
     Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices,
-      skewHeavyThreshold = Some(300L), segmentSecs = 2L * 86400, contextStrategy = "tails")
-    checkParity(dir, useTails = true)
-  }
-
-  test("multi-chunk side-files: a conversation spanning chunk boundaries carries per-chunk state") {
-    // chunkTurns is 65536 in production; the aggregate's chunking rule
-    // (floor(turn/65536)) must match the sweep's flush boundaries for a
-    // conversation crossing one — use a 70k-turn conversation, light
-    // path (no threshold)
-    import spark.implicits._
-    val n = 70000
-    val conv = spark.range(n).select(
-      lit("big_conv").as("conv_id"),
-      col("id").cast("int").as("turn_idx"),
-      when(pmod(col("id"), lit(2)) === 0, "user").otherwise("assistant").as("role"),
-      concat(lit("turn text "), col("id")).as("text"),
-      when(pmod(col("id"), lit(13)) === 0, concat(lit("tool_"), pmod(col("id"), lit(5)))).as("tool"),
-      timestamp_seconds(lit(start + 1000) + col("id") * 3).as("ts"))
-    val dir = Files.createTempDirectory("ssf_chunks").toString
-    Backfill.run(spark, conv, dir, start, sliceSecs, 2, contextStrategy = "tails")
-    checkParity(dir, useTails = true)
-    val chunks = Checkpoint.readDeltaTable(spark, dir)
-      .filter(col("conv_id") === "big_conv").select("chunk").distinct().count()
-    assert(chunks == 2, s"expected 2 turn-chunks for 70k turns, got $chunks")
+      skewHeavyThreshold = Some(300L), segmentSecs = 2L * 86400)
+    checkParity(dir)
   }
 }
